@@ -346,7 +346,7 @@ _REVERIFY_FIRST: dict[str, int] = {
     # oriented triangle edges, incremental-index token sets) — each
     # proven result-identical vs the r14 formulation at sf0.001/0.01/
     # 0.1 and oracle-MATCHed at sf0.001+sf0.01 after the edit. Pinning
-    # all 7 r15-edited queries spends 19 of the 50 slots and lets 4 of
+    # all 7 r15-edited queries spends 18 of the 50 slots and lets 3 of
     # the 35 r09 greens slip to r16 — in an optimization round whose
     # failure mode is a silently-moved hash on an EDITED query, driver
     # coverage of fresh edits outranks fully draining the stale cohort

@@ -2,7 +2,15 @@
 
 The reference's per-repo dataflow (``main.ts:79-144``) as DataFrame
 construction: parse → nested commits frame → explode file_changes →
-derive authors / repos / summary → staged multi-table publish.
+derive repos / summary → one staged multi-table publish.
+
+Every run, a first load or a refresh, takes the same write path: each
+table's batch is merged with the published table on its natural key
+and written to a sibling staging dir; ``authors`` is re-aggregated
+from the *staged* commits, so it is exact over the whole merged
+history (K2/A4) even when the batch holds only some of the repos; then
+all five tables publish together (K6). A failure while staging deletes
+what was staged and leaves the published tables untouched.
 
 Design decisions carried from SURVEY §7.3:
 
@@ -17,12 +25,15 @@ Design decisions carried from SURVEY §7.3:
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.exact import count_if
-from ..sinks.upsert import (
+# upsert_parquet* stay bound, unused: perfbench/tracing.py patches them here by name.
+from ..sinks.upsert import (  # noqa: F401
+    merge_with_table,
     publish_all,
     upsert_parquet,
     upsert_parquet_partitioned,
@@ -37,6 +48,12 @@ from ..sources.git_tags import repo_tags_df
 from ..sources.language import detect_language
 
 GIT_TABLES = ("commits", "file_changes", "authors", "repos", "tags")
+NATURAL_KEYS = {
+    "commits": ["repo_name", "sha"],
+    "file_changes": ["repo_name", "sha", "file_path"],
+    "repos": ["name"],
+    "tags": ["repo_name", "tag_name"],
+}
 
 
 def explode_file_changes(commits: DataFrame) -> DataFrame:
@@ -130,21 +147,11 @@ def etl_repos(
     repo_paths: list[str],
     output_dir: str,
     author_pattern: str | None = None,
-    layout: str = "flat",
 ) -> dict:
     """O1/O2: multi-repo ETL into a five-table Parquet warehouse with
-    idempotent natural-key merges and K6 staged publish. Returns a run
-    report (per-repo success/skip/fail counts — the reference's
-    summary banner, ``main.ts:357-369``).
-
-    ``layout='partitioned'`` is the at-scale warehouse shape: the
-    repo-keyed tables (commits / file_changes / tags) are laid out
-    ``partitionBy(repo_name)`` and incremental merges rewrite only the
-    partitions of repos present in the batch
-    (``upsert_parquet_partitioned``); the global tables (authors,
-    repos) still merge whole — they are node-scale, not fact-scale.
-    Both layouts produce identical table *contents* (asserted in
-    tests/test_git_etl_e2e.py)."""
+    idempotent natural-key merges and one K6 staged publish. Returns a
+    run report (per-repo success/skip/fail counts — the reference's
+    summary banner, ``main.ts:357-369``)."""
     report = {"processed": [], "skipped": [], "failed": []}
     selected: list[str] = []
     for path in repo_paths:
@@ -170,45 +177,28 @@ def etl_repos(
         for p in selected
     }
 
-    tables = {
+    batches = {
         "commits": commits.drop("file_changes"),
         "file_changes": explode_file_changes(commits),
-        "authors": aggregate_authors(commits),
         "repos": repo_metadata(commits, languages),
         "tags": repo_tags_df(spark, selected),
     }
-    keys = {
-        "commits": ["repo_name", "sha"],
-        "file_changes": ["repo_name", "sha", "file_path"],
-        "authors": ["email"],
-        "repos": ["name"],
-        "tags": ["repo_name", "tag_name"],
-    }
-
-    partitioned = {"commits", "file_changes", "tags"} if layout == "partitioned" else set()
 
     out = lambda t: os.path.join(output_dir, t)  # noqa: E731
-    if any(os.path.exists(out(t)) for t in GIT_TABLES):
-        # incremental run: per-table natural-key merge (idempotent)
-        for t, df in tables.items():
-            keep = "first" if t == "file_changes" else "last"
-            if t in partitioned:
-                upsert_parquet_partitioned(
-                    spark, df, out(t), keys[t], "repo_name", keep=keep
-                )
+    staged: dict[str, str] = {}
+    try:
+        for t in GIT_TABLES:
+            if t == "authors":
+                df = aggregate_authors(spark.read.parquet(staged["commits"]))
             else:
-                upsert_parquet(spark, df, out(t), keys[t], keep=keep)
-    else:
-        # first run: stage everything, then publish all-or-nothing (K6)
-        staged = {
-            write_staging(
-                df.dropDuplicates(keys[t]),
-                out(t),
-                partition_col="repo_name" if t in partitioned else None,
-            ): out(t)
-            for t, df in tables.items()
-        }
-        publish_all(staged)
+                keep = "first" if t == "file_changes" else "last"
+                df = merge_with_table(spark, batches[t], out(t), NATURAL_KEYS[t], keep)
+            staged[t] = write_staging(df, out(t))
+    except BaseException:
+        for tmp in staged.values():
+            shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    publish_all({tmp: out(t) for t, tmp in staged.items()})
 
     report["processed"] = selected
     report["summary"] = summary_stats(commits).collect()[0].asDict(recursive=True)

@@ -9,23 +9,26 @@ columnar store:
 - K3 ``INSERT OR IGNORE`` (first-writer-wins) → same window ordered
   ascending.
 - K2 authors accumulate-merge → **re-aggregation from the commits fact
-  table** (``aggregate_authors``): exact by construction, replacing
-  incremental MIN/MAX/+ accumulation — the partial/final aggregate
-  pattern Spark already implements internally.
-- K6 multi-table transaction → staging-then-publish: every table writes
-  to a staging dir; publish atomically renames all or nothing.
+  table**: the git pipeline aggregates ``authors`` over the *staged*
+  (already merged) commits, so it is exact over the whole history on
+  every run — the partial/final aggregate pattern Spark already
+  implements internally, in place of MIN/MAX/+ accumulation.
+- K6 multi-table transaction → staging-then-publish, on a first load
+  and a refresh alike: every table's merge writes to a staging dir
+  (``merge_with_table`` + ``write_staging``); publish renames all of
+  them once every table is staged.
 
-Scale notes: plain ``upsert_parquet`` rewrites the whole table per
-merge — fine for the test warehouse, wrong at 100 TB.
-``upsert_parquet_partitioned`` is the scale path: the table is laid
-out ``partitionBy(partition_col)`` and a merge touches ONLY the
-partitions that receive incoming keys — existing reads prune to those
-partitions (partition filter at the scan) and the write uses
-``partitionOverwriteMode=dynamic`` so untouched partitions' files are
-not even opened. A Delta/Iceberg MERGE backend slots behind the same
-function signature. Correctness (idempotence: running the same load
-twice yields identical tables; untouched-partition bytes identical)
-is asserted in tests/test_sinks.py.
+Scale notes: ``upsert_parquet`` and the git warehouse rewrite the whole
+table per merge — fine for the test warehouse, wrong at 100 TB.
+``upsert_parquet_partitioned`` (the streaming sink's path) is the scale
+path: the table is laid out ``partitionBy(partition_col)`` and a merge
+touches ONLY the partitions that receive incoming keys — existing reads
+prune to those partitions (partition filter at the scan) and the write
+uses ``partitionOverwriteMode=dynamic`` so untouched partitions' files
+are not even opened. A Delta/Iceberg MERGE backend slots behind the
+same function signature. Correctness (idempotence: running the same
+load twice yields identical tables; untouched-partition bytes
+identical) is asserted in tests/test_sinks.py.
 """
 
 from __future__ import annotations
@@ -77,6 +80,20 @@ def _merged(
     )
 
 
+def merge_with_table(
+    spark: SparkSession,
+    df: DataFrame,
+    path: str,
+    natural_key: list[str],
+    keep: str = "last",
+) -> DataFrame:
+    """``df`` merged on the natural key with the Parquet table at
+    ``path``, or deduped on its own when no table is published there
+    yet. Lazy: the caller writes the result to a staging dir."""
+    existing = spark.read.parquet(path) if os.path.exists(path) else None
+    return _merged(existing, df, natural_key, keep)
+
+
 def upsert_parquet(
     spark: SparkSession,
     df: DataFrame,
@@ -88,13 +105,8 @@ def upsert_parquet(
     key; also dedups within ``df`` itself (the reference relies on the
     UNIQUE constraint for both). Safe to re-run: a second identical
     call leaves the table unchanged."""
-    existing = None
-    if os.path.exists(path):
-        existing = spark.read.parquet(path)
-    merged = _merged(existing, df, natural_key, keep)
-    tmp = f"{path}.staging-{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(tmp)
-    publish(tmp, path)
+    merged = merge_with_table(spark, df, path, natural_key, keep)
+    publish(write_staging(merged, path), path)
 
 
 def upsert_parquet_partitioned(
@@ -150,18 +162,16 @@ def upsert_parquet_partitioned(
     )
 
 
-def write_staging(
-    df: DataFrame, final_path: str, partition_col: str | None = None
-) -> str:
-    """First half of the K6 transaction: write to a staging dir,
-    return its path for a later ``publish``. ``partition_col`` lays the
-    staged table out partitioned, so the published table supports the
-    partition-scoped merge path from day one."""
+def write_staging(df: DataFrame, final_path: str) -> str:
+    """First half of the K6 transaction: write to a staging dir beside
+    ``final_path``, return its path for a later ``publish``. A failed
+    write removes its partial staging dir before re-raising."""
     tmp = f"{final_path}.staging-{uuid.uuid4().hex[:8]}"
-    writer = df.write.mode("overwrite")
-    if partition_col is not None:
-        writer = writer.partitionBy(partition_col)
-    writer.parquet(tmp)
+    try:
+        df.write.mode("overwrite").parquet(tmp)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
     return tmp
 
 

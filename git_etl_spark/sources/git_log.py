@@ -18,11 +18,11 @@ an array of file changes. The implementation is new and Spark-first:
   under plain ``git log`` so their additions/deletions are 0.
 
 Scale path: ``repo_commits_df`` ingests a *list* of repos by
-parallelizing subprocess scans on the driver thread pool and unioning
-Arrow-built DataFrames. At real scale (thousands of repos) the same
-parser runs inside ``mapInPandas`` over a repo-list DataFrame so each
-executor shells out to git for its slice — the parse function is
-identical either way.
+parallelizing subprocess scans on the driver thread pool into one
+DataFrame. At real scale (thousands of repos, monorepos) the same
+scan and parser run on executors behind ``format("gitlog")``
+(``gitlog_datasource.py``), one input partition per repo or commit
+window.
 """
 
 from __future__ import annotations
@@ -46,6 +46,9 @@ LOG_FORMAT = (
     "%x00GIT_ETL_COMMIT%x00"
     "%H%x00%ae%x00%an%x00%ct%x00%P%x00%s"
 )
+
+# git subprocesses the driver runs at once in ``repo_commits_df``
+SCAN_THREADS = 8
 
 _RENAME_RE = re.compile(r"\{[^{}]*?=>\s*([^{}]*?)\}")
 
@@ -208,57 +211,12 @@ def list_tracked_files(repo_path: str) -> list[str]:
     return [ln for ln in _run_git(repo_path, "ls-files").splitlines() if ln]
 
 
-def repo_commits_df(
-    spark: SparkSession,
-    repo_paths: list[str],
-    branch: str | None = None,
-    max_workers: int = 8,
-) -> DataFrame:
-    """S1 as a DataFrame source: parallel subprocess scans →
-    one typed DataFrame (COMMITS_SCHEMA). Empty repo list or all-empty
-    repos still yield an empty frame with the right schema (F3 guard)."""
-    with ThreadPoolExecutor(max_workers=max_workers) as pool:
-        batches = list(pool.map(lambda p: scan_repo_commits(p, branch), repo_paths))
+def repo_commits_df(spark: SparkSession, repo_paths: list[str]) -> DataFrame:
+    """S1 as a DataFrame source: parallel subprocess scans of each
+    repo's checked-out branch → one typed DataFrame (COMMITS_SCHEMA).
+    Empty repo list or all-empty repos still yield an empty frame with
+    the right schema (F3 guard)."""
+    with ThreadPoolExecutor(max_workers=SCAN_THREADS) as pool:
+        batches = list(pool.map(scan_repo_commits, repo_paths))
     rows = [c for batch in batches for c in batch]
     return spark.createDataFrame(rows, COMMITS_SCHEMA)
-
-
-def repo_commits_df_distributed(
-    spark: SparkSession,
-    repo_paths: list[str],
-    branch: str | None = None,
-    slices: int | None = None,
-) -> DataFrame:
-    """S1 scale path: the repo *list* becomes a DataFrame and each
-    executor shells out to git for its slice inside ``mapInPandas`` —
-    ingestion bandwidth scales with the cluster instead of the driver.
-    Same parser (``parse_git_log_text``) as the driver-side version,
-    so the two paths cannot diverge semantically (asserted equal in
-    tests/test_git_etl_e2e.py).
-
-    Requirements at real scale: repos must be on storage every
-    executor can reach (shared FS / pre-synced clones), and one repo's
-    log must fit an Arrow batch — for monorepos, shard further by
-    commit range (``git log <since>..<until>``) using the same
-    function shape."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    if not repo_paths:
-        return spark.createDataFrame([], COMMITS_SCHEMA)
-
-    def scan_slice(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path in pdf["path"]:
-                commits = scan_repo_commits(path, branch)
-                if commits:
-                    yield pd.DataFrame(commits)
-
-    repo_df = spark.createDataFrame(
-        [(p,) for p in repo_paths], "path string"
-    ).repartition(slices or min(len(repo_paths), 64))
-    # mapInPandas carries the nested file_changes as object columns;
-    # rebuilding rows through the explicit schema keeps types exact
-    out = repo_df.mapInPandas(scan_slice, schema=COMMITS_SCHEMA)
-    return out

@@ -12,20 +12,18 @@ column pruning, caching, joins all apply.
 
 The per-partition work reuses ``scan_repo_commits`` /
 ``parse_git_log_text`` — the identical NUL-framed parser behind the
-driver-side (``repo_commits_df``) and mapInPandas
-(``repo_commits_df_distributed``) paths, so the three ingestion
-surfaces cannot diverge semantically (equality asserted in
-tests/test_git_parsers.py).
+driver-side ``repo_commits_df`` path, so the two ingestion surfaces
+cannot diverge semantically (equality asserted in
+tests/test_git_etl_e2e.py).
 
 Scale notes: parallelism unit = repository, or with ``numShards=k``
 a commit-range window of one repository (disjoint ``--skip`` /
 ``--max-count`` slices of the deterministic log ordering), so one
 huge monorepo fans out over k tasks instead of serializing into
-one. Repos must live on storage executors can
-reach, exactly like the mapInPandas path, and the ``git_etl_spark``
-package must be importable on executors (``spark-submit
---py-files``/cluster image — the standard Python-dependency channel;
-``read()`` runs there).
+one. Repos must live on storage executors can reach, and the
+``git_etl_spark`` package must be importable on executors
+(``spark-submit --py-files``/cluster image — the standard
+Python-dependency channel; ``read()`` runs there).
 """
 
 from __future__ import annotations

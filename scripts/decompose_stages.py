@@ -23,6 +23,7 @@ UI listener overhead — the bench's per-query seconds.
 
 from __future__ import annotations
 
+import datetime
 import json
 import sys
 import time
@@ -44,6 +45,14 @@ def _stages(base: str) -> dict[int, dict]:
     ):
         out[st["stageId"]] = st
     return out
+
+
+def _rest_time(value: str) -> float:
+    """Epoch seconds of a REST API time such as
+    ``2024-01-01T10:00:00.123GMT``, milliseconds kept."""
+    return datetime.datetime.strptime(
+        value.replace("GMT", "+0000"), "%Y-%m-%dT%H:%M:%S.%f%z"
+    ).timestamp()
 
 
 def main() -> int:
@@ -101,12 +110,7 @@ def main() -> int:
             comp = st.get("completionTime")
             stage_wall = 0.0
             if sub and comp:
-                fmt = "%Y-%m-%dT%H:%M:%S.%f%Z"
-                t_sub = time.mktime(time.strptime(sub, fmt))
-                t_comp = time.mktime(time.strptime(comp, fmt))
-                # strptime drops sub-second on %f? keep simple: REST
-                # gives ms precision in the ISO string parsed above
-                stage_wall = t_comp - t_sub
+                stage_wall = _rest_time(comp) - _rest_time(sub)
             tot_wall += max(stage_wall, 0.0)
             print(
                 f"{st['stageId']:>5} {stage_wall:>7.3f} "

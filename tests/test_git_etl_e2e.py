@@ -187,70 +187,129 @@ def test_discovery_finds_repo(synthetic_repo, tmp_path):
     assert load_repositories_config(str(cfg)) == []
 
 
-def test_distributed_ingestion_matches_driver_side(spark, synthetic_repo):
-    """S1 scale path: mapInPandas executor-side scans must produce
-    exactly the driver-side thread-pool result."""
-    from git_etl_spark.sources.git_log import (
-        repo_commits_df,
-        repo_commits_df_distributed,
+def _two_repos_sharing_an_author(root):
+    """Two repos whose histories share dana@example.com, every commit
+    at a distinct time; returns both paths."""
+    a, b = root / "shared-a", root / "shared-b"
+    for repo in (a, b):
+        repo.mkdir()
+        _git(repo, "init", "-q", "-b", "main")
+    _commit(
+        a, "Dana Old", "dana@example.com", "2024-05-01T10:00:00+00:00",
+        "a1", {"a.py": "a = 1\n"},
     )
+    _commit(
+        b, "Dana Old", "dana@example.com", "2024-05-02T10:00:00+00:00",
+        "b1", {"b.py": "b = 1\n"},
+    )
+    _commit(
+        a, "Eve Other", "eve@example.com", "2024-05-03T10:00:00+00:00",
+        "a2", {"a2.py": "a = 2\n"},
+    )
+    _commit(
+        b, "Dana Mid", "dana@example.com", "2024-05-04T10:00:00+00:00",
+        "b2", {"b2.py": "b = 2\n"},
+    )
+    return a, b
 
-    a = repo_commits_df(spark, [str(synthetic_repo)])
-    b = repo_commits_df_distributed(spark, [str(synthetic_repo)])
-    sa = sorted(map(repr, a.collect()))
-    sb = sorted(map(repr, b.collect()))
-    assert sa == sb
-    assert b.schema == a.schema
+
+def _authors_from_git_log(*repos):
+    """Per-author (count, first, last, latest name) straight from
+    ``git log`` across all ``repos`` — the ledger the authors table
+    must match."""
+    from datetime import datetime, timezone
+
+    stats = {}
+    for repo in repos:
+        out = subprocess.run(
+            ["git", "-C", str(repo), "log", "--format=%ae%x00%an%x00%ct"],
+            check=True, capture_output=True, text=True,
+        ).stdout
+        for line in out.splitlines():
+            email, name, ct = line.split("\x00")
+            at = datetime.fromtimestamp(int(ct), tz=timezone.utc).replace(tzinfo=None)
+            n, first, last, latest = stats.get(email, (0, at, at, name))
+            stats[email] = (
+                n + 1, min(first, at), max(last, at), name if at >= last else latest
+            )
+    return stats
 
 
-def test_partitioned_layout_equal_contents_and_scoped_merge(
-    spark, synthetic_repo, tmp_path_factory, tmp_path
-):
-    """layout='partitioned' end-to-end: same table contents as the flat
-    layout, and an incremental merge touching one repo leaves the other
-    repo's commits partition files byte-identical (the at-scale merge
-    contract, through the real pipeline rather than the sink alone)."""
-    import os as _os
-
+def test_refresh_of_one_repo_keeps_authors_exact(spark, tmp_path):
+    """K2/A4 across runs: an author shared by two repos must keep the
+    exact whole-history aggregate when a refresh carries only one of
+    the repos (a batch-only aggregate merged by email undercounts)."""
     from git_etl_spark.plans.git_pipeline import etl_repos
 
-    other = tmp_path_factory.mktemp("repos2") / "proj-beta"
-    other.mkdir()
-    _git(other, "init", "-q", "-b", "main")
+    a, b = _two_repos_sharing_an_author(tmp_path)
+    out = tmp_path / "warehouse"
+    etl_repos(spark, [str(a), str(b)], str(out))
     _commit(
-        other, "Cara Coder", "cara@example.com", "2024-03-01T09:00:00+00:00",
-        "beta initial", {"b.py": "b = 1\n"},
+        a, "Dana New", "dana@example.com", "2024-05-05T10:00:00+00:00",
+        "a3", {"a3.py": "a = 3\n"},
     )
+    etl_repos(spark, [str(a)], str(out))
 
-    flat, part = tmp_path / "flat", tmp_path / "part"
-    repos = [str(synthetic_repo), str(other)]
-    etl_repos(spark, repos, str(flat))
-    etl_repos(spark, repos, str(part), layout="partitioned")
+    got = {
+        r.email: (r.total_commits, r.first_commit_at, r.last_commit_at, r.name)
+        for r in spark.read.parquet(str(out / "authors")).collect()
+    }
+    expected = _authors_from_git_log(a, b)
+    assert expected["dana@example.com"][0] == 4
+    assert expected["dana@example.com"][3] == "Dana New"
+    assert got == expected
 
-    for table in ("commits", "file_changes", "authors", "repos", "tags"):
-        a = spark.read.parquet(str(flat / table))
-        b = spark.read.parquet(str(part / table)).select(*a.columns)
-        assert sorted(map(repr, a.collect())) == sorted(map(repr, b.collect())), table
 
-    # incremental: new commit lands in proj-beta only
-    pdir = part / "commits" / "repo_name=proj-alpha"
-    before = sorted(
-        (f, _os.path.getsize(pdir / f), _os.stat(pdir / f).st_mtime_ns)
-        for f in _os.listdir(pdir) if not f.startswith(("_", "."))
-    )
+def _warehouse_bytes(root):
+    """Every file under ``root`` (relative path → bytes)."""
+    return {
+        str(p.relative_to(root)): p.read_bytes()
+        for p in sorted(root.rglob("*")) if p.is_file()
+    } if root.exists() else {}
+
+
+def test_failed_staging_leaves_warehouse_untouched(spark, tmp_path, monkeypatch):
+    """K6 on a first load and on a refresh: when staging the 3rd table
+    fails, no published table changes (none appears on a first load)
+    and no ``.staging-*`` dir is left behind."""
+    from git_etl_spark.plans import git_pipeline
+
+    real = git_pipeline.write_staging
+    calls = []
+
+    def failing_third(*args, **kwargs):
+        calls.append(args)
+        if len(calls) == 3:
+            raise RuntimeError("injected staging failure")
+        return real(*args, **kwargs)
+
+    a, b = _two_repos_sharing_an_author(tmp_path)
+    out = tmp_path / "warehouse"
+    repos = [str(a), str(b)]
+
+    monkeypatch.setattr(git_pipeline, "write_staging", failing_third)
+    with pytest.raises(RuntimeError, match="injected"):
+        git_pipeline.etl_repos(spark, repos, str(out))
+    assert len(calls) == 3
+    assert _warehouse_bytes(out) == {}
+    assert not any(out.glob("*.staging-*"))
+
+    monkeypatch.setattr(git_pipeline, "write_staging", real)
+    git_pipeline.etl_repos(spark, repos, str(out))
+    before = _warehouse_bytes(out)
+    assert all((out / t).is_dir() for t in git_pipeline.GIT_TABLES)
+
     _commit(
-        other, "Cara Coder", "cara@example.com", "2024-03-02T09:00:00+00:00",
-        "beta second", {"b2.py": "b = 2\n"},
+        b, "Dana New", "dana@example.com", "2024-05-06T10:00:00+00:00",
+        "b3", {"b3.py": "b = 3\n"},
     )
-    etl_repos(spark, [str(other)], str(part), layout="partitioned")
-
-    after = sorted(
-        (f, _os.path.getsize(pdir / f), _os.stat(pdir / f).st_mtime_ns)
-        for f in _os.listdir(pdir) if not f.startswith(("_", "."))
-    )
-    assert after == before  # untouched repo partition never rewritten
-    commits = spark.read.parquet(str(part / "commits"))
-    assert commits.filter("repo_name = 'proj-beta'").count() == 2
+    calls.clear()
+    monkeypatch.setattr(git_pipeline, "write_staging", failing_third)
+    with pytest.raises(RuntimeError, match="injected"):
+        git_pipeline.etl_repos(spark, repos, str(out))
+    assert len(calls) == 3
+    assert _warehouse_bytes(out) == before
+    assert not any(out.glob("*.staging-*"))
 
 
 def test_gitlog_datasource_matches_driver_side(spark, synthetic_repo):

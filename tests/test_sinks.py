@@ -228,3 +228,21 @@ def test_failed_publish_leaves_no_staging_orphans(spark, tmp_path):
     assert leftovers == []
     # first table was already swapped in (documented mid-swap semantics)
     assert os.path.exists(t1)
+
+
+def test_failed_staging_write_leaves_no_dir(spark, tmp_path):
+    """A staging write whose job fails removes its partial dir, so a
+    caller that never learns the staging path leaves no orphan."""
+    from pyspark.sql import functions as F
+
+    from git_etl_spark.sinks.upsert import write_staging
+
+    bad = _df(spark, [("a", 1, "x")]).withColumn(
+        "payload",
+        F.when(F.col("v") == 1, F.raise_error(F.lit("boom"))).otherwise(
+            F.col("payload")
+        ),
+    )
+    with pytest.raises(Exception, match="boom"):
+        write_staging(bad, str(tmp_path / "t"))
+    assert os.listdir(tmp_path) == []
