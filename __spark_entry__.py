@@ -176,8 +176,8 @@ def _fp_changed_since_green(
     # round's commits and a just-closed round's floor is not yet
     # visible — flags then over-include (safe direction: queries are
     # re-verified sooner, never later) and self-heal at the
-    # round-close commit. scripts/ordering_dryrun.py shows the live
-    # state either way.
+    # round-close commit. Printing the first names of `queries()`
+    # shows the live state either way.
     floor_snaps: list[dict[str, str]] = []
     if verified:
         latest_rnd = max(verified.values())

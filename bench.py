@@ -16,9 +16,7 @@ Timing is best-of-``$SPARK_GRAFT_BENCH_REPS`` (default 3) per query:
 single-shot numbers on a shared box swing with GC pauses and run-to-run
 noise (observed ±8% on the total), so the headline is the per-query
 minimum — the reproducible steady-state cost. The first-pass sum is
-kept as ``cold_value`` in BENCH.json: queries that materialize a
-session memo (rep graph, cosine pairs, streaming source) bill that
-build only there.
+kept as ``cold_value`` in BENCH.json.
 
 The JSON line is guaranteed to be the ONLY stdout output: the real
 stdout fd is saved and redirected to stderr before the JVM starts
@@ -63,9 +61,10 @@ def main() -> None:
 
     def run(name: str) -> float:
         # time the build too: several operators legitimately do work at
-        # plan-build time (streaming replay, iterative loops, memoized
-        # materialization) — starting the clock after the build would
-        # under-bill exactly the queries that front-load execution
+        # plan-build time (streaming replay, iterative loops,
+        # checkpointed materialization) — starting the clock after the
+        # build would under-bill exactly the queries that front-load
+        # execution
         nonlocal n_run
         t0 = time.perf_counter()
         df = registry.QUERIES[name](spark, sf_dir)

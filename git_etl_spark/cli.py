@@ -119,6 +119,8 @@ def main(argv: list[str] | None = None) -> int:
             spark, candidates, args.output, author_pattern=args.author
         )
         report["skipped"] = non_dirs + report["skipped"]
+        for failure in report["failed"]:
+            print(f"Failed {failure['repo']}: {failure['error']}", file=sys.stderr)
         _print_banner(report, len(repositories))
         return 0
 

@@ -33,8 +33,8 @@ rows), so exact quantile scoring needs no global window either — and
 unlike the percentile-boundary-binning fallback some docstrings used
 to point at, it keeps the exact output contract at any scale.
 
-Cost and crossover (measured, scripts/bench_ranking_crossover.py,
-local[32], min-of-2 after warm-up, NTILE(10) + aggregate sink):
+Cost and crossover (measured on synthetic rows, PERFORMANCE.md round
+11, local[32], min-of-2 after warm-up, NTILE(10) + aggregate sink):
 
     rows        window    distributed
     50k         0.42 s    1.46 s   <- fixed jobs dominate

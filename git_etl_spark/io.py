@@ -72,64 +72,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             ),
         )
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
-    return tuple(load_table(spark, sf_dir, n) for n in names)
-
-
-def dataset_fingerprint(sf_dir: str, *names: str) -> str:
-    """Content-change fingerprint of one or more corpus tables under
-    ``sf_dir``: sorted (relpath, mtime_ns, size) triples per table.
-
-    Session-lifetime memo caches (checkpointed pair graphs, written
-    format copies, streaming replay sources) key on this in addition
-    to (applicationId, sf_dir) so regenerating the data under a reused
-    path — e.g. a test tmp dir — changes the key instead of serving
-    stale results. Bounded growth: one entry per distinct
-    content-version actually read in the process lifetime."""
-    parts: list[str] = []
-    for name in names:
-        root = table_path(sf_dir, name)
-        try:
-            if os.path.isdir(root):
-                # full recursive walk, not one listdir level: for a
-                # partitioned estate (root/date=X/part-*.parquet) an
-                # in-place rewrite of a leaf file changes the FILE's
-                # mtime but not its parent directory's stat, so a
-                # one-level fingerprint would serve stale memo results
-                # after a partition rewrite (r12 review)
-                for dirpath, dirs, filenames in sorted(os.walk(root)):
-                    # name-only line per subdirectory (no stat): an
-                    # added/removed EMPTY partition directory (a new
-                    # date slice before its first file, or a drained
-                    # one) is structural state a files-only walk would
-                    # miss (ADVICE r12)
-                    for d in sorted(dirs):
-                        rel = os.path.relpath(os.path.join(dirpath, d), root)
-                        parts.append(f"{name}/{rel}:dir")
-                    for fname in sorted(filenames):
-                        fpath = os.path.join(dirpath, fname)
-                        st = os.stat(fpath)
-                        rel = os.path.relpath(fpath, root)
-                        parts.append(
-                            f"{name}/{rel}:{st.st_mtime_ns}:{st.st_size}"
-                        )
-            else:
-                st = os.stat(root)
-                parts.append(f"{name}:{st.st_mtime_ns}:{st.st_size}")
-        except FileNotFoundError:
-            # genuine absence is a legitimate fingerprint state (the
-            # caller may be about to create the table). Any OTHER
-            # OSError (EACCES/EIO on a transiently unreadable leaf)
-            # propagates: mapping it to "missing" would silently
-            # change the fingerprint and bust — or worse, alias — the
-            # memo key (r12 deferred review item).
-            parts.append(f"{name}:missing")
-    return "|".join(parts)
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every corpus table as a temp view for ``spark.sql``."""
-    for name in CORPUS_TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -518,8 +518,7 @@ def pipeline_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     singleton clusters keyed by their own id.
 
     Cluster labels come from the collapsed-graph connected components
-    (:func:`...operators.dedup.dedup_cluster_components`, memoized
-    candidate generation shared within the session); the 80/10/10
+    (:func:`...operators.dedup.dedup_cluster_components`); the 80/10/10
     assignment hashes the cluster id through the same million-bucket
     md5 rule both engines compute identically. The DuckDB oracle
     re-derives the clusters with a recursive CTE, so the *entire*

@@ -26,9 +26,9 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.vector import norm
-from ..io import dataset_fingerprint, load_table
+from ..io import load_table
 from ..registry import query
-from ..session import iter_checkpoint, loop_shuffle_partitions, memo_disabled
+from ..session import iter_checkpoint, loop_shuffle_partitions
 
 # DuckDB twin of functions.vector.norm over the raw embedding column
 _DUCK_NORM = (
@@ -164,10 +164,8 @@ def dedup_keep_longest_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2 exact token-set Jaccard near-dup pairs (see
-    :func:`_jaccard_pairs_impl` for the candidate-generation scheme).
-    Built from the per-session materialized collapsed graph so the
-    clustering query consuming the same pairs in the same session does
-    not re-execute candidate generation."""
+    :func:`_jaccard_pairs_impl` for the candidate-generation scheme),
+    read off the checkpointed collapsed graph."""
     return _jaccard_pairs_impl(spark, sf_dir)
 
 
@@ -380,34 +378,15 @@ def _length_filter(
     return F.least(sz_a, sz_b) * F.lit(den) >= F.greatest(sz_a, sz_b) * F.lit(num)
 
 
-# d is one scalar derived from a full-scan max over the corpus's token
-# sets, and every pair-pipeline consumer used to re-pay that scan in a
-# multi-query session (five consumers × parity sweeps) — memoize per
-# (applicationId, sf_dir, documents fingerprint) like the other
-# session-lifetime memos (VERDICT r13 task 6). The reps-vs-all-sets
-# call sites deliberately share one entry: every distinct-set group's
-# rep carries toks identical to its members', so max(size(toks))
-# agrees by construction. The fingerprint keys out underlying-file
-# changes; memo_disabled() bypasses, same as _REP_GRAPH_MEMO.
-_CORPUS_D_MEMO: dict[tuple[str, str, str], int] = {}
-
-
 def _corpus_deletion_distance(
     spark: SparkSession, sf_dir: str, sets: DataFrame
 ) -> int:
-    """Derive d from the data (max token-set size), never assume it."""
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        dataset_fingerprint(sf_dir, "documents"),
-    )
-    if not memo_disabled() and key in _CORPUS_D_MEMO:
-        return _CORPUS_D_MEMO[key]
+    """Derive d from the data (max token-set size), never assume it.
+    Callers may pass the distinct-set reps or all sets: every rep
+    carries toks identical to its group's members', so max(size(toks))
+    agrees by construction."""
     max_sz = sets.agg(F.max(F.size("toks"))).collect()[0][0]
-    d = _deletion_distance(max_sz or 1)
-    if not memo_disabled():
-        _CORPUS_D_MEMO[key] = d
-    return d
+    return _deletion_distance(max_sz or 1)
 
 
 def _rep_graph_impl(
@@ -470,30 +449,15 @@ def _rep_graph_impl(
     return members, rep_pairs
 
 
-# The collapsed graph feeds both the registered pair query and the
-# connected-components clustering that runs in the same session —
-# memoize one checkpointed copy per (session, sf_dir) so candidate
-# generation + verification execute once, not once per consumer. Tiny
-# by construction (distinct sets + verified rep pairs), so pinning is
-# safe.
-_REP_GRAPH_MEMO: dict[tuple[str, str, str], tuple[DataFrame, DataFrame]] = {}
-
-
 def _rep_graph_materialized(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        dataset_fingerprint(sf_dir, "documents"),
-    )
-    pair = None if memo_disabled() else _REP_GRAPH_MEMO.get(key)
-    if pair is None:
-        members, rep_pairs = _rep_graph_impl(spark, sf_dir)
-        pair = (members.localCheckpoint(), rep_pairs.localCheckpoint())
-        if not memo_disabled():
-            _REP_GRAPH_MEMO[key] = pair
-    return pair
+    """The collapsed graph, checkpointed so candidate generation and
+    verification run once per query, not once per downstream use. Tiny
+    by construction (distinct sets + verified rep pairs), so pinning is
+    safe."""
+    members, rep_pairs = _rep_graph_impl(spark, sf_dir)
+    return members.localCheckpoint(), rep_pairs.localCheckpoint()
 
 
 @query(
@@ -516,9 +480,8 @@ def _rep_graph_materialized(
 )
 def dedup_embedding_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (cos ≥ 0.35 — calibrated
-    to this corpus's near-random vectors). The verified pair set is
-    memoized per (session, sf_dir) — the semantic-clustering query
-    consumes the same pairs in the same session (`_COS_PAIRS_MEMO`).
+    to this corpus's near-random vectors). The semantic-clustering
+    query consumes the same pairs.
 
     This is the EXACT tier (all pairs scored). At this calibrated-low
     threshold that is not a compromise: ~1% of ALL pairs qualify on
@@ -545,26 +508,11 @@ def dedup_embedding_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB the same normalized-columnar layout feeds LSH/IVF bucket
     joins (see simsearch_lsh_bucketed); only the blocking changes."""
-    memo_key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        dataset_fingerprint(sf_dir, "embeddings"),
-    )
-    memoized = None if memo_disabled() else _COS_PAIRS_MEMO.get(memo_key)
-    if memoized is not None:
-        return memoized
-
-    pairs = _exact_cosine_pairs(
+    # tiny (near-dup pairs only), checkpointed for the iterative
+    # semantic-clustering consumer
+    return _exact_cosine_pairs(
         spark, sf_dir, COSINE_DUP_THRESHOLD
-    ).localCheckpoint()  # tiny (near-dup pairs only); reused by the
-    # semantic-clustering consumer in the same session
-    if not memo_disabled():
-        _COS_PAIRS_MEMO[memo_key] = pairs
-    return pairs
-
-
-# verified cosine pair set per (session, sf_dir) — see docstring above
-_COS_PAIRS_MEMO: dict[tuple[str, str, str], DataFrame] = {}
+    ).localCheckpoint()
 
 EMBED_DIM = 64
 
@@ -1174,7 +1122,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SIMHASH_HAMMING_RADIUS = 3  # pairs within 3 of 48 bits are near-dups
-_SIMHASH_PAIRS_MEMO: dict[tuple[str, str, str], DataFrame] = {}
 SIMHASH_BANDS = SIMHASH_HAMMING_RADIUS + 1  # pigeonhole: ≥1 exact band
 _SIMHASH_BAND_BITS = SIMHASH_BITS // SIMHASH_BANDS  # 12
 
@@ -1207,14 +1154,6 @@ def dedup_simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     splitting applies if one bucket runs hot. The DuckDB oracle *is*
     the O(n²) definition, so the banding is proved lossless on every
     run, not assumed."""
-    memo_key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        dataset_fingerprint(sf_dir, "documents"),
-    )
-    memoized = None if memo_disabled() else _SIMHASH_PAIRS_MEMO.get(memo_key)
-    if memoized is not None:
-        return memoized
     docs = load_table(spark, sf_dir, "documents")
     sigs = _simhash_sig_df(docs)
     mask = (1 << _SIMHASH_BAND_BITS) - 1
@@ -1242,19 +1181,15 @@ def dedup_simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    pairs = (
+    return (
         cand.withColumn(
             "hamming",
             F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))).cast("long"),
         )
         .filter(F.col("hamming") <= SIMHASH_HAMMING_RADIUS)
         .select("doc_a", "doc_b", "hamming")
-        .localCheckpoint()  # tiny (verified near-dup pairs); reused by
-        # the cluster consumer in the same session
+        .localCheckpoint()  # tiny (verified near-dup pairs)
     )
-    if not memo_disabled():
-        _SIMHASH_PAIRS_MEMO[memo_key] = pairs
-    return pairs
 
 
 def _minhash_coefficients() -> list[tuple[int, int]]:
@@ -1595,14 +1530,6 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     swap simple propagation for large-star/small-star — same per-round
     join shape, provably O(log n) rounds — and checkpoint to reliable
     storage."""
-    memo_key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        dataset_fingerprint(sf_dir, "documents"),
-    )
-    memoized = None if memo_disabled() else _CLUSTER_MEMO.get(memo_key)
-    if memoized is not None:
-        return memoized
     members, rep_pairs = _rep_graph_materialized(spark, sf_dir)
     edges = rep_pairs.select(F.col("key_a").alias("a"), F.col("key_b").alias("b"))
     sym = edges.unionByName(
@@ -1670,19 +1597,11 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             # engine is diameter-independent, so escalate instead of
             # failing the query
             labels = _ls_ss_labels()
-    result = (
+    return (
         members.join(labels, "set_key")
         .select(F.col("doc_id"), F.col("lbl").alias("cluster_id"))
-        .localCheckpoint()  # converged labels; reused by the
-        # leakage-safe split consumer in the same session
+        .localCheckpoint()  # converged labels
     )
-    if not memo_disabled():
-        _CLUSTER_MEMO[memo_key] = result
-    return result
-
-
-# converged cluster labels per (session, sf_dir)
-_CLUSTER_MEMO: dict[tuple[str, str, str], DataFrame] = {}
 
 
 MIN_LABEL_MAX_ROUNDS = 20
@@ -1795,8 +1714,8 @@ def dedup_incremental_index_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # four consumers (both sides of the key join, both token sides of
     # the verify join) each re-ran the tokenize+sort projection —
     # materialize the |docs|-row set table once (r15, guide §2.4). Lazy:
-    # the first action against it (the corpus_d probe on a memo miss,
-    # else the candidate join itself) materializes it — no extra job.
+    # the first action against it (the corpus_d probe) materializes
+    # it — no extra job.
     sets = iter_checkpoint(_token_sets(spark, sf_dir), eager=False)
     # the persisted-index stand-in; key family sized to the corpus so
     # the scheme stays lossless if set sizes grow (see
@@ -1916,31 +1835,14 @@ def semantic_clusters(
     if edge_source == "blocked":
         pairs = blocked_cosine_pairs(spark, sf_dir, threshold, **lsh_kwargs)
     elif threshold == COSINE_DUP_THRESHOLD:
-        # default registered path: pairs AND converged labels are both
-        # memoized per (session, sf_dir) — same reuse policy as the
-        # Jaccard family's _CLUSTER_MEMO (the labels are deterministic
-        # given the memoized pair set, and label propagation's per-round
-        # fixed cost dominates re-runs within a session)
-        memo_key = (
-            spark.sparkContext.applicationId,
-            sf_dir,
-            dataset_fingerprint(sf_dir, "embeddings"),
-        )
-        memoized = None if memo_disabled() else _SEM_CLUSTER_MEMO.get(memo_key)
-        if memoized is not None:
-            return memoized
-        pairs = dedup_embedding_cosine_pairs(spark, sf_dir)  # memoized
-        result = _cluster_vec_pairs(spark, pairs).localCheckpoint()
-        if not memo_disabled():
-            _SEM_CLUSTER_MEMO[memo_key] = result
-        return result
+        # default registered path: the pair query's checkpointed pairs
+        # feed the label-propagation rounds, and the converged labels
+        # are checkpointed too
+        pairs = dedup_embedding_cosine_pairs(spark, sf_dir)
+        return _cluster_vec_pairs(spark, pairs).localCheckpoint()
     else:
         pairs = _exact_cosine_pairs(spark, sf_dir, threshold)
     return _cluster_vec_pairs(spark, pairs)
-
-
-# converged semantic-cluster labels per (session, sf_dir), default path
-_SEM_CLUSTER_MEMO: dict[tuple[str, str, str], DataFrame] = {}
 
 
 def _cluster_vec_pairs(spark: SparkSession, pairs: DataFrame) -> DataFrame:

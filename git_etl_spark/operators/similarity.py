@@ -29,9 +29,9 @@ from ..functions.vector import (
     py_dec14,
     sum14,
 )
-from ..io import dataset_fingerprint, load_table
+from ..io import load_table
 from ..registry import query
-from ..session import iter_checkpoint, loop_shuffle_partitions, memo_disabled
+from ..session import iter_checkpoint, loop_shuffle_partitions
 
 TOP_K = 5
 N_QUERIES = 10  # query set = vec_id < 10
@@ -221,33 +221,6 @@ K_CELLS = 16  # IVF coarse cells
 N_PROBE = 2  # cells searched per query
 
 
-# trained IVF index (centroids, posting list) per (session, sf_dir,
-# data fingerprint): an ANN index is a persisted artifact queried many
-# times, not rebuilt per query — the default-probe and full-probe
-# surfaces (and repeated runs in one session) share one training job.
-# Both component DataFrames are checkpointed (lineage-free) and small
-# (K·dim centroids, one (vec_id, cell) row per vector).
-_IVF_INDEX_MEMO: dict[tuple[str, str, str], tuple[DataFrame, DataFrame]] = {}
-
-
-def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """Train (or fetch the session-memoized) IVF index: Lloyd k-means
-    centroids plus the per-vector cell posting list. See ivf_topk for
-    the algorithm and determinism contract."""
-    memo_key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        dataset_fingerprint(sf_dir, "embeddings"),
-    )
-    memoized = None if memo_disabled() else _IVF_INDEX_MEMO.get(memo_key)
-    if memoized is not None:
-        return memoized
-    centroids, posting = _ivf_train(spark, sf_dir)
-    if not memo_disabled():
-        _IVF_INDEX_MEMO[memo_key] = (centroids, posting)
-    return centroids, posting
-
-
 def ivf_topk(spark: SparkSession, sf_dir: str, n_probe: int = N_PROBE) -> DataFrame:
     """IVF (inverted-file) approximate top-k: Lloyd k-means learns
     K_CELLS coarse cells, every vector is posted to its nearest cell,
@@ -268,7 +241,7 @@ def ivf_topk(spark: SparkSession, sf_dir: str, n_probe: int = N_PROBE) -> DataFr
     join on cell id — skewed (hot) cells split by AQE. Training runs
     on a sample; assignment streams."""
     emb = load_table(spark, sf_dir, "embeddings")
-    centroids, posting = _ivf_index(spark, sf_dir)
+    centroids, posting = _ivf_train(spark, sf_dir)
     l2 = lambda a, b: F.aggregate(  # noqa: E731
         F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
         F.lit(0.0),
@@ -311,7 +284,9 @@ def ivf_topk(spark: SparkSession, sf_dir: str, n_probe: int = N_PROBE) -> DataFr
 
 def _ivf_train(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """The IVF training job (see ivf_topk docstring): deterministic
-    Lloyd rounds producing (centroids, posting)."""
+    Lloyd rounds producing (centroids, posting). Both are checkpointed
+    (lineage-free) and small (K·dim centroids, one (vec_id, cell) row
+    per vector)."""
     emb = load_table(spark, sf_dir, "embeddings")
     vecs = emb.select(
         "vec_id",
@@ -478,12 +453,6 @@ def _pq_l2(a, b):
     )
 
 
-# trained PQ index (codebooks, codes) per (session, sf_dir, data
-# fingerprint) — same artifact-reuse rationale as _IVF_INDEX_MEMO:
-# the ADC and full-re-rank surfaces query one trained quantizer.
-_PQ_INDEX_MEMO: dict[tuple[str, str, str], tuple[DataFrame, DataFrame]] = {}
-
-
 def pq_codebooks_and_codes(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -495,14 +464,6 @@ def pq_codebooks_and_codes(
     round is a single job keyed by (m, code), not a per-subspace loop —
     so the round count, not the subspace count, bounds the number of
     shuffles."""
-    memo_key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        dataset_fingerprint(sf_dir, "embeddings"),
-    )
-    memoized = None if memo_disabled() else _PQ_INDEX_MEMO.get(memo_key)
-    if memoized is not None:
-        return memoized
     emb = load_table(spark, sf_dir, "embeddings")
     sub_dim = 64 // PQ_M
     # (vec_id, m, sv): the m-th contiguous sub_dim-slice, cast double
@@ -571,8 +532,6 @@ def pq_codebooks_and_codes(
         .filter(F.col("rn") == 1)
         .select("vec_id", "m", "code")
     )
-    if not memo_disabled():
-        _PQ_INDEX_MEMO[memo_key] = (codebooks, codes)
     return codebooks, codes
 
 

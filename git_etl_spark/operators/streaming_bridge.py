@@ -11,6 +11,7 @@ every batch operator (not just a rows-only smoke check).
 
 from __future__ import annotations
 
+import atexit
 import os
 import tempfile
 import uuid
@@ -19,36 +20,27 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import dataset_fingerprint, load_table, table_path
+from ..io import load_table, table_path
 from ..registry import query
-from ..session import memo_disabled
 from ..streaming.events_stream import hourly_counts, sessionized
 
-# replay source parquet per (session, sf_dir): written once, reused by
-# every streaming replay query in the session, deleted at interpreter
-# exit (the memo outlives any one query, so per-query cleanup would
-# defeat it — but the temp dirs must not accumulate across sessions).
-# _SINK_DIRS holds the per-run materialized sink outputs (the replay
-# result lives in executor-written parquet, never on the driver) and
-# is cleaned up the same way.
-_SRC_MEMO: dict[tuple[str, str, str, int], str] = {}
-_SINK_DIRS: list[str] = []
+# every replay's source parquet and materialized sink output (the
+# replay result lives in executor-written parquet, never on the
+# driver), deleted at interpreter exit: the returned DataFrame reads
+# the sink dir lazily, so per-query cleanup would pull it out from
+# under the caller — but the temp dirs must not accumulate.
+_TEMP_DIRS: list[str] = []
 
 
-def _cleanup_replay_sources() -> None:
+def _cleanup_replay_dirs() -> None:
     import shutil
 
-    for path in _SRC_MEMO.values():
+    for path in _TEMP_DIRS:
         shutil.rmtree(path, ignore_errors=True)
-    _SRC_MEMO.clear()
-    for path in _SINK_DIRS:
-        shutil.rmtree(path, ignore_errors=True)
-    _SINK_DIRS.clear()
+    _TEMP_DIRS.clear()
 
 
-import atexit  # noqa: E402  (registration belongs right next to the memo)
-
-atexit.register(_cleanup_replay_sources)
+atexit.register(_cleanup_replay_dirs)
 
 
 def _replay_partitions(
@@ -75,12 +67,7 @@ def _replay_partitions(
       10.2 s flat; sizing gives 5.4 s at 16-23 partitions and the A/B
       curve kept improving to 3.7 s at 32 — the fold is Arrow+pandas
       CPU, the opposite cost shape from the JVM state stores.
-
-    ``SPARK_GRAFT_REPLAY_PARTITIONS`` overrides both for experiments.
     """
-    env = os.environ.get("SPARK_GRAFT_REPLAY_PARTITIONS")
-    if env:
-        return int(env)
     if not sized:
         return 4
     path = table_path(sf_dir, "events")
@@ -98,39 +85,15 @@ def _replay_partitions(
     )
 
 
-def _replay_source(
-    spark: SparkSession, sf_dir: str, events: DataFrame, n_parts: int
-) -> str:
-    """The replay source parquet is identical for every streaming query
-    over the same (session, sf_dir) — write it once and reuse.
-    ``n_parts`` files so the file-source pre-shuffle stage has as many
-    splits as the stateful stage has partitions. ``n_parts`` is part of
-    the memo key: it is usually derived from sf_dir, but the
-    ``SPARK_GRAFT_REPLAY_PARTITIONS`` experiment knob can change it
-    mid-session, and a memoized source written with the old file count
-    would silently defeat the splits-match-partitions intent."""
-    import uuid as _uuid
-
-    memo_key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        dataset_fingerprint(sf_dir, "events"),
-        n_parts,
+def _replay_source(events: DataFrame, n_parts: int) -> str:
+    """Write the replay source parquet to a fresh temp dir as
+    ``n_parts`` files, so the file-source pre-shuffle stage has as many
+    splits as the stateful stage has partitions."""
+    src_dir = os.path.join(
+        tempfile.gettempdir(), f"ges-stream-{uuid.uuid4().hex[:8]}"
     )
-    src_dir = None if memo_disabled() else _SRC_MEMO.get(memo_key)
-    if src_dir is None:
-        src_dir = os.path.join(
-            tempfile.gettempdir(), f"ges-stream-{_uuid.uuid4().hex[:8]}"
-        )
-        events.repartition(n_parts).write.parquet(src_dir)
-        if memo_disabled():
-            # the knob skips the memo PUT, but the dir must still die
-            # with the interpreter — park it on the unconditional
-            # cleanup list, else repeated per-solve measurement runs
-            # accumulate full-table copies in /tmp
-            _SINK_DIRS.append(src_dir)
-        else:
-            _SRC_MEMO[memo_key] = src_dir
+    _TEMP_DIRS.append(src_dir)
+    events.repartition(n_parts).write.parquet(src_dir)
     return src_dir
 
 
@@ -156,13 +119,11 @@ def _replay(
     sized for Python-CPU-bound folds (``sized_partitions=True``); see
     that docstring for the r11 A/B numbers behind the split. The
     source parquet is always written volume-sized so the pre-shuffle
-    scan has splits regardless of which class reads it first."""
+    scan has splits whichever partition class the replay uses."""
     events = load_table(spark, sf_dir, "events")
     run_id = uuid.uuid4().hex[:8]
     n_parts = _replay_partitions(spark, sf_dir, sized=sized_partitions)
-    src_dir = _replay_source(
-        spark, sf_dir, events, _replay_partitions(spark, sf_dir, sized=True)
-    )
+    src_dir = _replay_source(events, _replay_partitions(spark, sf_dir, sized=True))
     stream = spark.readStream.schema(events.schema).parquet(src_dir)
     name = f"stream_replay_{run_id}"
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
@@ -186,7 +147,7 @@ def _replay(
     # though the windowed replays are aggregate-sized)
     sink_dir = os.path.join(tempfile.gettempdir(), f"ges-sink-{run_id}")
     spark.table(name).select(*out_cols).write.parquet(sink_dir)
-    _SINK_DIRS.append(sink_dir)
+    _TEMP_DIRS.append(sink_dir)
     spark.catalog.dropTempView(name)
     return spark.read.parquet(sink_dir).select(*out_cols)
 
@@ -405,7 +366,7 @@ def streaming_foreachbatch_upsert_replay(spark: SparkSession, sf_dir: str) -> Da
     # merge/write parallelism — volume-sized (r11: 1.67 -> 1.20 s at
     # 32 cores on the 10x corpus)
     n_parts = _replay_partitions(spark, sf_dir, sized=True)
-    src_dir = _replay_source(spark, sf_dir, events, n_parts)
+    src_dir = _replay_source(events, n_parts)
     stream = spark.readStream.schema(events.schema).parquet(src_dir)
     target = os.path.join(tempfile.gettempdir(), f"ges-upsert-{run_id}")
     ckpt = os.path.join(tempfile.gettempdir(), f"ges-upsert-cp-{run_id}")
@@ -416,7 +377,7 @@ def streaming_foreachbatch_upsert_replay(spark: SparkSession, sf_dir: str) -> Da
         q.awaitTermination(300)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    _SINK_DIRS.extend([target, ckpt])
+    _TEMP_DIRS.extend([target, ckpt])
     return spark.read.parquet(target).select(
         "event_id", "ts", "user_id", "event_type", "value"
     )

@@ -20,10 +20,6 @@ def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
 def pushed_filters(df: DataFrame) -> list[str]:
     """All PushedFilters entries across the plan's parquet scans."""
     out: list[str] = []
@@ -48,10 +44,6 @@ def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in physical_plan(df) or (
         "BroadcastNestedLoopJoin" in physical_plan(df)
     )
-
-
-def has_sort_merge_join(df: DataFrame) -> bool:
-    return "SortMergeJoin" in physical_plan(df)
 
 
 def has_take_ordered(df: DataFrame) -> bool:

@@ -166,8 +166,11 @@ def etl_repos(
     if not selected:
         return report
 
-    commits = repo_commits_df(spark, selected)
-    if commits.isEmpty():  # F3 zero-commit guard
+    commits, scan_errors = repo_commits_df(spark, selected)
+    for path, error in scan_errors.items():
+        report["failed"].append({"repo": path, "error": error})
+    selected = [p for p in selected if p not in scan_errors]
+    if not selected or commits.isEmpty():  # all failed, or F3 zero-commit guard
         report["skipped"].extend(selected)
         return report
     commits = commits.dropDuplicates(["repo_name", "sha"]).cache()

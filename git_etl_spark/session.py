@@ -89,24 +89,6 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def memo_disabled() -> bool:
-    """True when ``SPARK_GRAFT_DISABLE_MEMO`` is set to a non-empty
-    value other than ``0`` — a measurement knob that bypasses every
-    intra-session result memo (pagerank fixpoint, dedup pair graphs,
-    BPE merge table, streaming replay source) so each query call is a
-    full per-solve run.
-
-    The memos model real production sharing (one converged artifact,
-    several consuming surfaces) and stay ON for bench and the driver —
-    but a SCALE measurement of a memoized query in a session that
-    already ran it measures the cache hit, not the solve (the r11
-    cores-screen blind spot: pagerank/BPE/cluster readings were memo
-    hits — PERFORMANCE.md round 11). Sites gate only the memo GET and
-    PUT on this flag; keys, invalidation, and default behavior are
-    unchanged."""
-    return os.environ.get("SPARK_GRAFT_DISABLE_MEMO", "0") not in ("", "0")
-
-
 def iter_checkpoint(df, eager: bool = True):
     """Per-round lineage cut for iterative operators.
 

@@ -182,8 +182,8 @@ def publish(staging_path: str, final_path: str) -> None:
     filesystem — staging dirs are therefore always created as siblings
     of the final path (same parent directory ⇒ same mount), asserted
     below. On object stores (S3/GCS) directory rename is copy+delete,
-    not atomic: deploy this sink there behind a metadata pointer
-    (versioned-table sink in sinks/versioned.py) or a table format.
+    not atomic: deploy this sink there behind a table format (Delta,
+    Iceberg, Hudi) whose commit is a metadata-pointer swap.
     Readers racing a publish can observe a brief missing-path window
     between the two renames and should retry.
 
@@ -218,9 +218,10 @@ def publish_all(staged: dict[str, str]) -> None:
     first swap, so a failure during *staging* leaves all tables
     untouched (the BEGIN/COMMIT analogue — reference
     ``src/transactions.ts:43-56``). A failure mid-swap cleans up every
-    not-yet-published staging dir so no orphans remain; cross-table
-    snapshot atomicity (all swaps or none) needs a metadata pointer —
-    see sinks/versioned.py for that tier."""
+    not-yet-published staging dir so no orphans remain. Cross-table
+    snapshot atomicity (all swaps or none) is out of reach of
+    directory renames: it needs a table format with a multi-table
+    commit (one metadata-pointer swap)."""
     items = list(staged.items())
     for i, (staging_path, final_path) in enumerate(items):
         try:

@@ -211,12 +211,27 @@ def list_tracked_files(repo_path: str) -> list[str]:
     return [ln for ln in _run_git(repo_path, "ls-files").splitlines() if ln]
 
 
-def repo_commits_df(spark: SparkSession, repo_paths: list[str]) -> DataFrame:
+def _scan_isolated(repo_path: str) -> tuple[list[dict], str | None]:
+    """One repo's scan as (commits, None), or ([], error) if it raised
+    — git's own stderr included, which names the cause."""
+    try:
+        return scan_repo_commits(repo_path), None
+    except Exception as exc:  # noqa: BLE001 — O2 per-repo fail isolation
+        detail = (getattr(exc, "stderr", None) or "").strip()
+        return [], f"{exc} {detail}".strip()
+
+
+def repo_commits_df(
+    spark: SparkSession, repo_paths: list[str]
+) -> tuple[DataFrame, dict[str, str]]:
     """S1 as a DataFrame source: parallel subprocess scans of each
-    repo's checked-out branch → one typed DataFrame (COMMITS_SCHEMA).
-    Empty repo list or all-empty repos still yield an empty frame with
-    the right schema (F3 guard)."""
+    repo's checked-out branch → one typed DataFrame (COMMITS_SCHEMA),
+    plus ``{repo_path: error}`` for every repo whose scan raised (O2:
+    an empty repo or a non-git dir fails alone; the other repos' rows
+    are all there). Empty repo list or all-failed repos still yield an
+    empty frame with the right schema (F3 guard)."""
     with ThreadPoolExecutor(max_workers=SCAN_THREADS) as pool:
-        batches = list(pool.map(scan_repo_commits, repo_paths))
-    rows = [c for batch in batches for c in batch]
-    return spark.createDataFrame(rows, COMMITS_SCHEMA)
+        scans = list(pool.map(_scan_isolated, repo_paths))
+    rows = [c for batch, _ in scans for c in batch]
+    errors = {p: err for p, (_, err) in zip(repo_paths, scans) if err is not None}
+    return spark.createDataFrame(rows, COMMITS_SCHEMA), errors

@@ -64,22 +64,6 @@ def hourly_counts(events: DataFrame) -> DataFrame:
     )
 
 
-def sliding_counts(events: DataFrame) -> DataFrame:
-    """Sliding 1-hour window every 15 minutes — each event lands in 4
-    overlapping buckets."""
-    return (
-        _with_event_time(events)
-        .withWatermark("ts", WATERMARK)
-        .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
-        .agg(F.count("*").alias("n"))
-        .select(
-            instant_to_ntz(F.col("w.start")).alias("win_start"),
-            instant_to_ntz(F.col("w.end")).alias("win_end"),
-            "n",
-        )
-    )
-
-
 def sessionized(events: DataFrame) -> DataFrame:
     """Session windows with a 10-minute inactivity gap — streaming twin
     of the batch lag/running-sum sessionization (same gap constant:

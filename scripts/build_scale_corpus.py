@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Build the 10x-scaled corpus used by scripts/sweep_cores.py.
+"""Build the 10x-scaled corpus for the cores/scale studies.
 
 Rounds 6/8 built equivalent corpora ad-hoc and lost the builders with
 the session; this one is committed so the scale studies reproduce.

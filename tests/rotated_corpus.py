@@ -1,7 +1,7 @@
 """Rotated-vocabulary corpus builder — the r11 robustness axis,
-extracted from the test fixture (r15) so the full-registry closing
-sweeps (scripts/sweep_parity.py over every axis corpus) and the
-standing gate (test_rotated_corpus.py) build the IDENTICAL corpus.
+extracted from the test fixture (r15) so the full-registry oracle
+sweeps over every axis corpus and the standing gate
+(test_rotated_corpus.py) build the IDENTICAL corpus.
 
 Scheme (mirrors scripts/build_scale_corpus.py, collapsed to one
 factor): documents get shifted ids and a length-preserving [a-z] /

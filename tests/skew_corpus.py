@@ -88,7 +88,7 @@ def _replicate_skewed(
     out = {f.name: [] for f in t.schema}
 
     # deterministic "is this row hot" assignment: position within the
-    # replicated stream, no RNG (stable corpus for memo keys and
+    # replicated stream, no RNG (stable corpus across
     # repeated surveys)
     def hot(i: int, rep: int, frac: float) -> bool:
         return ((i + rep * n) * 7919) % 1000 < int(frac * 1000)

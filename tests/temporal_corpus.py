@@ -116,7 +116,7 @@ def _hostile_events(pa, t, factor, late_frac, dup_frac, dst_frac, n_extreme):
     time_traveler = cols["user_id"][0]
 
     # deterministic row-class assignment: position within the
-    # replicated stream, no RNG (stable corpus for memo keys and
+    # replicated stream, no RNG (stable corpus across
     # repeated surveys) — same idiom as skew_corpus.hot()
     def cls(i: int, rep: int) -> int:
         return ((i + rep * n) * 7919) % 1000

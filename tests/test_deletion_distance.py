@@ -203,34 +203,3 @@ def test_prefix_scheme_equals_deletion_scheme_on_shipped_corpus(
     assert sorted(map(tuple, deletion_pairs.collect())) == sorted(
         map(tuple, prefix_pairs.collect())
     )
-
-
-def test_corpus_deletion_distance_memoized(spark, monkeypatch):
-    """VERDICT r13 task 6: the corpus-d full-scan max is paid once per
-    (applicationId, sf_dir, documents fingerprint) and served from the
-    memo for every later pair-pipeline consumer in the session; the
-    SPARK_GRAFT_DISABLE_MEMO knob bypasses both get and put so scale
-    measurements time the solve."""
-    from .conftest import SF_SMOKE
-
-    monkeypatch.delenv("SPARK_GRAFT_DISABLE_MEMO", raising=False)
-    dedup._CORPUS_D_MEMO.clear()
-    sets = dedup._token_sets(spark, SF_SMOKE)
-    d1 = dedup._corpus_deletion_distance(spark, SF_SMOKE, sets)
-    assert len(dedup._CORPUS_D_MEMO) == 1
-
-    # second call must not touch the DataFrame at all (scan-free)
-    class _Boom:
-        def agg(self, *a, **k):  # pragma: no cover - must not run
-            raise AssertionError("memoized call re-scanned the corpus")
-
-    d2 = dedup._corpus_deletion_distance(spark, SF_SMOKE, _Boom())
-    assert d2 == d1
-
-    # the memoized value is the same one the scan derives (parity)
-    monkeypatch.setenv("SPARK_GRAFT_DISABLE_MEMO", "1")
-    d3 = dedup._corpus_deletion_distance(spark, SF_SMOKE, sets)
-    assert d3 == d1
-    # knob ON: no put happened (still exactly the one earlier entry)
-    assert len(dedup._CORPUS_D_MEMO) == 1
-    dedup._CORPUS_D_MEMO.clear()

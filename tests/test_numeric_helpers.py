@@ -128,78 +128,6 @@ def test_qsum_skips_nulls_like_sql_sum(spark):
     assert got == want == 6.875
 
 
-def test_dataset_fingerprint_sees_nested_rewrites(tmp_path):
-    """An in-place rewrite of a leaf file inside a partition directory
-    (same name, same size, newer mtime — the production partition-
-    rewrite shape) must change the fingerprint even though the parent
-    directory's stat is untouched."""
-    import os
-    import time
-
-    from git_etl_spark.io import dataset_fingerprint
-
-    root = tmp_path / "documents.parquet" / "date=2026-01-01"
-    root.mkdir(parents=True)
-    leaf = root / "part-0.parquet"
-    leaf.write_bytes(b"v1-bytes")
-    before = dataset_fingerprint(str(tmp_path), "documents")
-    time.sleep(0.01)
-    leaf.write_bytes(b"v2-bytes")  # same size, same path, newer mtime
-    os.utime(tmp_path / "documents.parquet")  # parent stat irrelevant
-    after = dataset_fingerprint(str(tmp_path), "documents")
-    assert before != after
-
-
-def test_dataset_fingerprint_sees_empty_partition_dirs(tmp_path):
-    """An added or removed EMPTY partition directory (a new date slice
-    before its first file, or a drained one) is structural state the
-    fingerprint must see — a files-only walk missed it (ADVICE r12)."""
-    from git_etl_spark.io import dataset_fingerprint
-
-    root = tmp_path / "documents.parquet"
-    root.mkdir()
-    (root / "date=2026-01-01").mkdir()
-    (root / "date=2026-01-01" / "part-0.parquet").write_bytes(b"x")
-    before = dataset_fingerprint(str(tmp_path), "documents")
-    empty = root / "date=2026-01-02"
-    empty.mkdir()  # empty: no files for the walk to see
-    with_empty = dataset_fingerprint(str(tmp_path), "documents")
-    assert with_empty != before
-    empty.rmdir()
-    assert dataset_fingerprint(str(tmp_path), "documents") == before
-
-
-def test_dataset_fingerprint_enoent_vs_other_oserror(tmp_path, monkeypatch):
-    """Genuine absence fingerprints as ':missing' (the caller may be
-    about to create the table); any OTHER OSError (EACCES/EIO on a
-    transiently unreadable leaf) must PROPAGATE — mapping it to
-    'missing' would silently change the fingerprint and bust, or
-    alias, the memo key (r12 deferred review item)."""
-    import os
-
-    import pytest
-
-    from git_etl_spark.io import dataset_fingerprint
-
-    # absent table → legitimate 'missing' state
-    assert dataset_fingerprint(str(tmp_path), "orders") == "orders:missing"
-
-    root = tmp_path / "documents.parquet"
-    root.mkdir()
-    leaf = root / "part-0.parquet"
-    leaf.write_bytes(b"x")
-    real_stat = os.stat
-
-    def stat_eacces(path, *a, **k):
-        if str(path) == str(leaf):
-            raise PermissionError(13, "Permission denied", str(path))
-        return real_stat(path, *a, **k)
-
-    monkeypatch.setattr(os, "stat", stat_eacces)
-    with pytest.raises(PermissionError):
-        dataset_fingerprint(str(tmp_path), "documents")
-
-
 def test_load_table_pins_ansi_once_per_session(spark):
     """load_table pins ANSI for the no-silent-wrap posture, but only
     ONCE per session (memoized by applicationId): re-setting on every

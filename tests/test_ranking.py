@@ -369,3 +369,20 @@ def test_global_ntile_backtick_in_out_name(spark):
         for r in global_ntile(small, 5, [F.col("v")], out).collect()
     }
     assert got_small == {1: 1, 2: 2}
+
+
+def test_global_ntile_non_identifier_out_name(spark):
+    """``out`` feeds a generated column name into raw SQL — names with
+    spaces/reserved words must survive (backtick quoting)."""
+    from pyspark.sql import functions as F
+
+    from git_etl_spark.functions.ranking import global_ntile
+
+    df = spark.range(10).select(F.col("id"))
+    got = global_ntile(df, 3, [F.col("id")], out="tile 2", num_partitions=2)
+    rows = {(r["id"], r["tile 2"]) for r in got.collect()}
+    # NTILE(3) over 10 rows: sizes 4,3,3
+    want = {(i, 1) for i in range(4)} | {(i, 2) for i in range(4, 7)} | {
+        (i, 3) for i in range(7, 10)
+    }
+    assert rows == want

@@ -68,11 +68,11 @@ SKEW_DELEGATES = [
 # oracle-parity subset: cheap enough for the gate budget, covering the
 # fixed family plus the hot-key agg/join/window shapes.
 # proj_string_ops and source_xml_roundtrip joined in r14 after the
-# full-oracle sweep over this corpus (sweep_parity.py /tmp/skew_2x)
-# caught two value defects the r13 execute-only survey missed:
-# ANSI CAST('') crash on digit-free sources (count() had PRUNED the
-# projection, masking the crash) and XML reader whitespace trimming
-# on trailing-space text (PERFORMANCE.md round 14).
+# full-oracle sweep over this corpus (its 2x build) caught two value
+# defects the r13 execute-only survey missed: ANSI CAST('') crash on
+# digit-free sources (count() had PRUNED the projection, masking the
+# crash) and XML reader whitespace trimming on trailing-space text
+# (PERFORMANCE.md round 14).
 SKEW_ORACLED = [
     "dedup_jaccard_pairs",
     "dedup_incremental_index_join",
